@@ -1606,6 +1606,10 @@ object Similarity {
     * unrolled dot terms overflowed Janino's 64 KB fused-method limit,
     * forcing the scan stage out of whole-stage fusion — both gone. */
   def pqEncode(corpus: DataFrame, bk: PqBooks): DataFrame = {
+    // all books empty ([[pqTrainSeeded]]'s no-seed degeneration): no
+    // vector has a code, so nothing is encoded
+    if (bk.books.forall(_.isEmpty))
+      return corpus.filter(lit(false)).withColumn("codes", typedLit(Seq.empty[Int]))
     import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
     val codeCols = (0 until bk.m).map { s =>
       // the kernel's ties-to-smaller-index IS the old struct form's
@@ -1702,26 +1706,27 @@ object Similarity {
     // null non-seed entries; order is irrelevant — seeded training maps
     // rows by id). Metrics ride the action that materializes the cut
     // (Dataset.checkpoint runs under withAction for both the local and
-    // reliable paths), with a bounded wait + explicit re-read fallback
-    // so a metrics regression can never hang or break the query.
+    // reliable paths); [[Barrier.awaitObserved]] bounds the wait and
+    // falls back to an explicit re-read.
     val obs = org.apache.spark.sql.Observation()
     val assigned = Barrier.cut(
       coarseResiduals(corpus, coarse).observe(obs,
         collect_list(when(col("id").isin(seedIds: _*),
           struct(col("id"), col("r")))).as("seed_rows")))
+    def seedRow(r: Row) = (r.getLong(0), r.getSeq[Double](1).toSeq)
     val seedRows: Seq[(Long, Seq[Double])] =
-      scala.util.Try(scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(30, "s")))
-        .toOption match {
-        case Some(row) =>
-          row.getSeq[Row](0).map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-        case None => // fallback: one cheap scan of the checkpointed blocks
-          assigned.filter(col("id").isin(seedIds: _*))
-            .select(col("id"), col("r")).collect()
-            .toSeq.map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
+      Barrier.awaitObserved(obs)(_.getSeq[Row](0).map(seedRow)) {
+        // one cheap scan of the checkpointed blocks
+        assigned.filter(col("id").isin(seedIds: _*))
+          .select(col("id"), col("r")).collect().toSeq.map(seedRow)
       }
     val resid = assigned.select(col("id"), col("r").as("e"))
     val bk = pqTrainSeeded(resid, m, dim, seedIds, seedRows, iters)
+    // no seed in the corpus → empty books → no candidate can be scored
+    if (bk.books.forall(_.isEmpty))
+      return probes.select(col("probe_id")).crossJoin(corpus.select(col("id")))
+        .filter(lit(false))
+        .select(col("probe_id"), lit(0).as("rank"), col("id"), lit(0.0).as("adc"))
     // c_id travels THROUGH the encode projection instead of being
     // re-attached by a corpus-wide self-join on id (two exchanges + a
     // sort-merge join + a second read of the checkpoint, all removed —
@@ -2008,11 +2013,11 @@ object Similarity {
 
   /** EXACT-COSINE RE-RANK over a persisted IVF-PQ index — the standard
     * production fix for quantization-bound recall (the regime the q130b
-    * gate measured at recall@3 ≈ 0.33 and the RecallProbe sweep proved
-    * nprobe cannot move): take the top-`rerank` candidates per probe by
-    * ADC (cheap — m code-byte lookups per pair, never the vectors),
-    * fetch ONLY those candidates' full vectors from the corpus, recompute
-    * the true cosine, and emit the top-k. ADC's job collapses from
+    * gate measured at recall@3 ≈ 0.33 and the SOAK.md round-12 nprobe
+    * sweep proved nprobe cannot move): take the top-`rerank` candidates
+    * per probe by ADC (cheap — m code-byte lookups per pair, never the
+    * vectors), fetch ONLY those candidates' full vectors from the
+    * corpus, recompute the true cosine, and emit the top-k. ADC's job collapses from
     * "rank exactly" to "don't drop the true neighbors from a
     * rerank-sized shortlist" — a far weaker demand on the codebooks, so
     * small-m indexes keep their 16× compression while the emitted

@@ -11,14 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - float outputs are rounded (HALF_UP in both engines) at a precision far
   *    below accumulated-error scale, never at a representable boundary;
   *  - DuckDB's HUGEINT sums are cast back to BIGINT to match Spark's LongType.
-  *
-  * `bench = true` marks the headline queries Bench.scala times at sf0.1.
   */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    bench: Boolean = false,
     benchSkip: Boolean = false, // fixture-scale queries that ignore sfDir
     // Build-once-serve-many hook: Bench runs this UNTIMED before the
     // timed rounds (persisted-index builds), so the samples measure only

@@ -57,14 +57,13 @@ object SimilarityQueries {
       SELECT probe_id, rank, id, round(cos, 9) AS cos
       FROM scored WHERE rank <= 5
       ORDER BY probe_id, rank
-    """),
-    bench = true)
+    """))
 
   /** (corpus, seed centroids, probes) — the ONE input construction the
     * whole IVF gate family shares. private[graft] so measurement probes
-    * (RecallProbe) sweep exactly the setup the gates score — a probe on
-    * a re-implemented copy would silently stop corresponding to the
-    * gate numbers it exists to explain. */
+    * (the recall sweeps in SOAK.md rounds 12-13) sweep exactly the setup
+    * the gates score — a probe on a re-implemented copy would silently
+    * stop corresponding to the gate numbers it exists to explain. */
   private[graft] def ivfInputs(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val e = emb(s, d)
@@ -457,8 +456,7 @@ object SimilarityQueries {
       """
       SELECT c_id, (j - 1)::INT AS dim, round(m, 9) AS m
       FROM m2 ORDER BY c_id, dim
-    """),
-    bench = true)
+    """))
 
   /** q28 on TRAINED centroids: the same label-medoid seeds, improved by 2
     * Lloyd rounds ([[Similarity.kmeansTrain]]), then the identical IVF
@@ -504,8 +502,7 @@ object SimilarityQueries {
       SELECT probe_id, rank, id, round(cos, 9) AS cos
       FROM scored WHERE rank <= 3
       ORDER BY probe_id, rank
-    """),
-    bench = true)
+    """))
 
   /** Hyperplane-LSH ANN ([[Similarity.lshTopK]]): 16 md5-derived random
     * hyperplanes → sign signatures → 2-bit band collisions (8 bands;
@@ -552,8 +549,7 @@ object SimilarityQueries {
       SELECT probe_id, rank, id, round(cos, 9) AS cos
       FROM scored WHERE rank <= 3
       ORDER BY probe_id, rank
-    """),
-    bench = true)
+    """))
 
   /** Random ±1 (Johnson–Lindenstrauss) projection 64 → 8 dims — the
     * storage-free dimensionality-reduction front of the ANN ladder: sign
@@ -588,8 +584,7 @@ object SimilarityQueries {
       FROM emb
       ORDER BY vec_id
       """
-    },
-    bench = true)
+    })
 
   /** Symmetric int8 quantization of the embedding column — the 4×
     * memory/IO reduction a 100 TB vector store runs before ANN: per
@@ -1020,8 +1015,7 @@ object SimilarityQueries {
       FROM bfn p
       LEFT JOIN hits h ON h.probe_id = p.probe_id
       ORDER BY p.probe_id
-    """),
-    bench = true)
+    """))
 
   /** Recall@k for the QUANTIZED ladder — the quality gate q130 gives the
     * unquantized IVF, applied to the PERSISTED IVF-PQ index (q127c's
@@ -1037,10 +1031,10 @@ object SimilarityQueries {
     * arithmetic, so a flipped assignment anywhere upstream breaks this
     * gate exactly as it breaks q127b/q127c. Measured at sf0.01 (5k
     * vectors): IVF-PQ at nprobe=2 scores mean recall@3 0.33 vs the
-    * unquantized IVF's 0.63 at the same nprobe, and the RecallProbe
-    * nprobe sweep shows the PQ number is QUANTIZATION-bound (saturates
-    * ~0.38 while IVF climbs to 0.97 — the fix is m/kSub, not nprobe;
-    * SOAK.md round 12). benchSkip: the timed body would be the one-off index
+    * unquantized IVF's 0.63 at the same nprobe, and the nprobe sweep
+    * shows the PQ number is QUANTIZATION-bound (saturates ~0.38 while
+    * IVF climbs to 0.97 — the fix is m/kSub, not nprobe; SOAK.md
+    * round 12). benchSkip: the timed body would be the one-off index
     * WRITE plus two training runs (the q127c convention); the probe
     * path is what production re-runs. */
   val q130bPqRecall = QueryDef(
@@ -1197,7 +1191,7 @@ object SimilarityQueries {
     * from 0.33 to 0.75 at sf0.01 and 0.23 to 0.57 at sf0.1 (SOAK.md
     * round 13) at the cost of 32 exact dot products per probe. The
     * residual gap is PRUNING-bound, measured, not asserted: the
-    * RecallProbe rerank sweep re-scores EVERY probed-bucket member
+    * rerank sweep (SOAK.md round 13) re-scores EVERY probed-bucket member
     * exactly (the R→∞ ceiling) and R=32 sits ON that ceiling at sf0.01
     * (0.75 = 0.75), within 0.07 of it at sf0.1 (0.57 vs 0.63 — bucket
     * occupancy grew 10×, so a shortlist term appears; R=128 closes
@@ -1225,7 +1219,7 @@ object SimilarityQueries {
     benchSkip = true)
 
   /** Recall@3 of the persisted IVF-PQ index at kSub = 64 — the CAPACITY
-    * fix the round-12 RecallProbe sweep diagnosed and validated
+    * fix the round-12 recall sweep (SOAK.md) diagnosed and validated
     * (quantization-bound at kSub=16: nprobe sweeps saturate ~0.38 while
     * kSub=64 lifts recall everywhere), now pinned under the cross-engine
     * oracle instead of living only in a test-main probe: same m=16,
@@ -1304,8 +1298,7 @@ object SimilarityQueries {
       SELECT probe_id, rank, id, round(cos, 9) AS cos
       FROM scored WHERE rank <= 3
       ORDER BY probe_id, rank
-    """),
-    bench = true)
+    """))
 
   /** INLINE-filtered IVF over a PAYLOAD-carrying persisted index: the
     * index is written with `label` stored in its rows
@@ -1369,8 +1362,7 @@ object SimilarityQueries {
       SELECT probe_id, prank AS rank, id, round(cos, 9) AS cos
       FROM pf WHERE prank <= 3
       ORDER BY probe_id, rank
-    """),
-    bench = true)
+    """))
 
   /** Recall@3 of BOTH filtered-search strategies against the exact
     * filtered baseline (q133), through the same
@@ -1451,8 +1443,7 @@ object SimilarityQueries {
              round(coalesce(h.n_hit, 0) / least(3, p.n_ex), 6) AS recall
       FROM bfn p LEFT JOIN hpf h ON h.probe_id = p.probe_id
       ORDER BY strategy, probe_id
-    """),
-    bench = true)
+    """))
 
   /** The PQ-LADDER FILTERED-SERVE COMPOSITION the re-rank operator's
     * scaladoc prescribes, now gated instead of documented: the code
@@ -1554,8 +1545,7 @@ object SimilarityQueries {
           round(col("cos"), 9).as("cos"))
         .orderBy("probe_id", "rank")
     },
-    Some(seenExclusionOracleSql),
-    bench = true)
+    Some(seenExclusionOracleSql))
 
   /** PER-PROBE EXTERNAL EXCLUSION on the QUANTIZED ladder — the
     * fourth filtered-serve quadrant (external × per-probe, q133f's
@@ -1809,8 +1799,7 @@ object SimilarityQueries {
       SELECT row_number() OVER (ORDER BY rrf DESC, id) AS rank,
              id, round(rrf, 9) AS rrf
       FROM ftop ORDER BY rank
-    """),
-    bench = true)
+    """))
 
   /** Index HEALTH on the QUANTIZED index — q136's diagnostic proven
     * over the PQ code table ([[Similarity.indexHealth]] is index-kind
@@ -1904,8 +1893,7 @@ object SimilarityQueries {
       SELECT probe_id, rank, id, round(rrf, 9) AS rrf
       FROM rankd WHERE rank <= 10
       ORDER BY probe_id, rank
-    """),
-    bench = true)
+    """))
 
   /** WEIGHTED batch fusion ([[Similarity.rrfFuseByProbe]] with
     * per-leg weights — wRRF, w_i/(c + rank)) — the production dial
@@ -1972,8 +1960,7 @@ object SimilarityQueries {
           round(col("rrf"), 9).as("rrf"))
         .orderBy("probe_id", "rank")
     },
-    Some(weightedHybridOracleSql),
-    bench = true)
+    Some(weightedHybridOracleSql))
 
   /** HARD-NEGATIVE MINING ([[Similarity.ivfTopKIndexed]]'s per-probe
     * `pairFilter`) — the contrastive-training data generator every
@@ -2170,7 +2157,6 @@ object SimilarityQueries {
         .orderBy("probe_id", "rank")
     },
     Some(ivfOracleSql),
-    bench = true,
     benchSetup = Some(ensureServeIvf))
 
   /** TIMED quantized serve ([[Similarity.ivfPqTopKRerankIndexed]]) —
@@ -2198,7 +2184,6 @@ object SimilarityQueries {
       FROM rr WHERE rank <= 3
       ORDER BY probe_id, rank
     """),
-    bench = true,
     benchSetup = Some(ensureServePq))
 
   /** TIMED filtered-serve stack (q133f's shape over the PERSISTED
@@ -2221,7 +2206,6 @@ object SimilarityQueries {
         .orderBy("probe_id", "rank")
     },
     Some(seenExclusionOracleSql),
-    bench = true,
     benchSetup = Some(ensureServeIvf))
 
   /** TIMED hard-negative serve on the quantized ladder (q137b's shape
@@ -2254,7 +2238,6 @@ object SimilarityQueries {
         .orderBy("probe_id", "rank")
     },
     Some(pqHardNegOracleSql),
-    bench = true,
     benchSetup = Some(ensureServePq))
 
   /** TIMED hybrid serve (q135c's weighted-fusion stack over the
@@ -2294,7 +2277,6 @@ object SimilarityQueries {
         .orderBy("probe_id", "rank")
     },
     Some(weightedHybridOracleSql),
-    bench = true,
     benchSetup = Some(ensureServeIvf))
 
   val all: Seq[QueryDef] = Seq(q27AnnBruteForce, q28AnnIvf, q28bAnnIvfIndexed,

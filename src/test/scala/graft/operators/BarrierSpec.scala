@@ -56,6 +56,22 @@ class BarrierSpec extends SparkSpec {
     }
   }
 
+  test("awaitObserved: a failing read takes the fallback, which equals the observed value") {
+    val obs = org.apache.spark.sql.Observation()
+    val cut = Barrier.cut((1L to 40L).toDF("id").observe(obs, sum(col("id")).as("s")))
+    val observed = Barrier.awaitObserved(obs)(_.getLong(0))(
+      fail("fallback taken on a healthy metric"))
+    var recomputed = false
+    val fellBack = Barrier.awaitObserved(obs)(
+        _ => throw new IllegalStateException("metrics row unreadable")) {
+      recomputed = true
+      cut.agg(sum(col("id"))).head().getLong(0)
+    }
+    assert(observed == 820L)
+    assert(recomputed, "a throwing read must take the fallback")
+    assert(fellBack == observed)
+  }
+
   test("conf unset again: subsequent cuts revert to localCheckpoint") {
     // the opt-in is the CONF, not the context's (sticky) checkpoint dir:
     // after the conf is unset, cuts must not silently keep writing

@@ -115,14 +115,24 @@ class DedupSpec extends SparkSpec {
 
   test("connectedComponents with a reliable checkpoint dir matches the default path") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ccp").toString
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 3L)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(pairs, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
-    assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
-    // reliable checkpoint actually wrote to the fault-tolerant path
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(java.nio.file.Files.isRegularFile(_)).count()
-    assert(wrote > 0, s"expected checkpoint files under $dir")
+    spark.conf.set(Barrier.ConfKey, dir)
+    try {
+      val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 3L)).toDF("id_a", "id_b")
+      val comps = Dedup.connectedComponents(pairs)
+        .as[(Long, Long)].collect().toMap
+      assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
+      // reliable checkpoint actually wrote to the fault-tolerant path
+      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(java.nio.file.Files.isRegularFile(_)).count()
+      assert(wrote > 0, s"expected checkpoint files under $dir")
+    } finally {
+      // unset the opt-in and re-point the context-global checkpoint dir
+      // off the temp dir (the BarrierSpec convention)
+      spark.conf.unset(Barrier.ConfKey)
+      val scratch = java.nio.file.Paths.get("target", "barrier-spec-ckpt")
+      java.nio.file.Files.createDirectories(scratch)
+      spark.sparkContext.setCheckpointDir(scratch.toString)
+    }
   }
 
   test("dedupCorpus keeps one representative per exact/near cluster") {

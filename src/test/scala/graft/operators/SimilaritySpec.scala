@@ -296,6 +296,25 @@ class SimilaritySpec extends SparkSpec {
       corpus, m = 2, dim = 4, Seq(0L, 1L), seedRows, 2).books == bkClean.books)
   }
 
+  test("empty codebooks: pqEncode and ivfPqTopK return empty results, not a kernel error") {
+    import spark.implicits._
+    val corpus = Seq(
+      (0L, Seq(0.0, 0.0, 1.0, 1.0)), (1L, Seq(1.0, 1.0, 0.0, 0.0)),
+      (2L, Seq(0.9, 1.1, 0.1, 0.0))).toDF("id", "e")
+    val coarse = Seq((0, Seq(0.0, 0.0, 0.0, 0.0))).toDF("c_id", "c")
+    val probes = corpus.select(col("id").as("probe_id"), col("e").as("p"))
+    // no seed id is in the corpus: the trainer returns all-empty books
+    val bk = Similarity.pqTrain(corpus, m = 2, dim = 4, Seq(100L, 101L), 2)
+    assert(bk.books.forall(_.isEmpty))
+    val enc = Similarity.pqEncode(corpus, bk)
+    assert(enc.columns.toSeq == Seq("id", "e", "codes"))
+    assert(enc.isEmpty)
+    val top = Similarity.ivfPqTopK(corpus, coarse, probes, m = 2, dim = 4,
+      seedIds = Seq(100L, 101L), iters = 2, k = 2, nprobe = 1)
+    assert(top.columns.toSeq == Seq("probe_id", "rank", "id", "adc"))
+    assert(top.isEmpty)
+  }
+
   test("property: recallAtK == scan-the-definition reference on random top-k frames (3 seeds)") {
     // the metric q130/q130b gate everything through, fuzzed against a
     // plain-Scala restatement of its contract: per exact-side probe,
